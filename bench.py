@@ -462,12 +462,18 @@ def main() -> int:
     # round-over-round comparison to buy a diagnostic. The noop-sink
     # save() builds a fresh QueryExecution per action, so the probe
     # conf re-plans physically even for plan-cached builders.
-    # SPARK_GRAFT_SCALING_PROBE=0 skips.
+    # SPARK_GRAFT_SCALING_PROBE=0 skips, and so does a probe width equal
+    # to the headline width (every run at <= 4 CPUs): those passes would
+    # re-time the headline conf for a ratio of 1.0 by construction.
     scaling_probe = None
+    shuffle_key = "spark.sql.shuffle.partitions"
+    prev_shuffle = spark.conf.get(shuffle_key)
     probe_w = max(4, int(cpus)) if cpus.isdigit() else None
-    if probe_w and os.environ.get("SPARK_GRAFT_SCALING_PROBE", "1") != "0":
-        shuffle_key = "spark.sql.shuffle.partitions"
-        prev_shuffle = spark.conf.get(shuffle_key)
+    if (
+        probe_w
+        and probe_w != int(prev_shuffle)
+        and os.environ.get("SPARK_GRAFT_SCALING_PROBE", "1") != "0"
+    ):
         spark.conf.set(shuffle_key, str(probe_w))
         try:
             probe_best: dict[str, float] = {}

@@ -34,35 +34,13 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import session_state
+
 # canonical list lives in the dependency-free ``tableset`` module so
 # the pyarrow-only tools (mutate_corpus) can share it without a
 # pyspark import; re-exported here because the engine/tests/tools
 # historically import it from this module
 from ..tableset import TABLES  # noqa: F401
-
-
-# (applicationId, session identity, sf_dir, table) → analyzed scan
-# DataFrame. A DataFrame
-# is an immutable logical plan, so reusing it across queries is safe;
-# without the cache every query re-lists the path and re-reads parquet
-# footers during analysis (~20-50ms × 67 queries × 1-3 tables — the
-# single-node analogue of having no metastore). Keyed by applicationId
-# so a new session never sees another session's plans; the id(spark)
-# term keeps SparkSession.newSession() siblings apart too (same appId,
-# separate session-scoped confs like nanosAsLong).
-#
-# Liveness invariant (applies to _PLAN_CACHE and datapipe._PAIRS_CACHE
-# too): entries are never evicted, and each cached DataFrame holds a
-# strong reference to its SparkSession — which is exactly what makes
-# the id(spark) key collision-safe (a live entry keeps the session
-# alive, so its id cannot be reused by a new session). Any future
-# eviction scheme must drop the FRAME together with the KEY (e.g. a
-# WeakKeyDictionary keyed on the session object with an inner
-# (sf_dir, name) dict); dropping frames while keeping keys would
-# reopen id-reuse collisions. Unbounded growth is bounded in practice
-# by sessions × tables/queries — a process that churns many sessions
-# should recycle one session per dataset instead.
-_SCAN_CACHE: dict[tuple[str, int, str, str], DataFrame] = {}
 
 
 # Shared integer micro-unit scale for log-score quantization
@@ -232,8 +210,13 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     NTZ directly (current testdata), and legacy TIMESTAMP(NANOS) reads
     as a long (``nanosAsLong``) truncated to µs (see legacy_nanos_to_ntz).
     """
-    key = (spark.sparkContext.applicationId, id(spark), sf_dir, name)
-    cached = _SCAN_CACHE.get(key)
+    # Analysed scans are memoized per session: a DataFrame is an
+    # immutable logical plan, so reusing it across queries is safe, and
+    # without it every query re-lists the path and re-reads parquet
+    # footers during analysis (~20-50ms × 67 queries × 1-3 tables — the
+    # single-node analogue of having no metastore).
+    scans = session_state(spark, "scan")
+    cached = scans.get((sf_dir, name))
     if cached is not None:
         return cached
     # Self-contained: the driver supplies its own SparkSession, so these
@@ -260,7 +243,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # only reachable if a driver session disabled NTZ inference;
             # sessions pin UTC so this cast is the identity reinterpret
             df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    _SCAN_CACHE[key] = df
+    scans[(sf_dir, name)] = df
     return df
 
 
@@ -368,16 +351,6 @@ class QueryDef:
     effectful: bool = False
 
 
-# (applicationId, session identity, sf_dir, query name) → built
-# DataFrame (logical plan). The session identity term matters because
-# SparkSession.newSession() shares the applicationId but has its own
-# temp-view/conf state; a cached frame must never cross sessions.
-# Caveat (inherent to plan caching): confs read at BUILD time (e.g. a
-# repartition width derived from shuffle.partitions) are frozen into
-# the cached plan — a conf sweep needs a fresh session.
-_PLAN_CACHE: dict[tuple[str, int, str, str], DataFrame] = {}
-
-
 def _cached_builder(q: "QueryDef") -> Callable[[SparkSession, str], DataFrame]:
     # CACHE INVARIANT: every ACTION on a cached frame re-executes the
     # full scan/shuffle/compute — which is only true while no cached
@@ -385,94 +358,76 @@ def _cached_builder(q: "QueryDef") -> Callable[[SparkSession, str], DataFrame]:
     # localCheckpoint or .cache() would serve later actions from
     # persisted blocks; such a query must NOT go through this cache
     # (mark it effectful, or better, restructure for ReuseExchange —
-    # see q_tfidf_topk).
+    # see q_tfidf_topk). Confs read at BUILD time (e.g. a repartition
+    # width derived from shuffle.partitions) are frozen into the cached
+    # plan — a conf sweep needs a fresh session.
     if q.effectful:
         return q.builder
 
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (spark.sparkContext.applicationId, id(spark), sf_dir, q.name)
-        df = _PLAN_CACHE.get(key)
+        plans = session_state(spark, "plan")
+        df = plans.get((sf_dir, q.name))
         if df is None:
             df = q.builder(spark, sf_dir)
-            _PLAN_CACHE[key] = df
+            plans[(sf_dir, q.name)] = df
         return df
 
     return build
 
 
-# Verification-priority ordering. The correctness harness records
-# verdicts for a ~50-query prefix of dict order, so queries rotate each
-# round to keep every verdict fresh (two-round freshness invariant).
-# Round-13 rotation (r12-verdict task #1): (a) test_unique and
-# decontaminate LEAD — their code changed in round 12 AFTER the r12
-# rotation commit, so their only driver verdict predates the change;
-# (b) the rest of the r11-stale cohort (CORRECTNESS_r11 keys minus
-# CORRECTNESS_r12 keys, 46 more) so every query again carries an
-# r12-or-r13 verdict; (c) two r12-fresh round-13 optimization targets
-# (see the trailing block below) — the standing rule is that any query
-# whose code changes in-round must sit in the prefix IN THE CHANGING
-# COMMIT so rotation order can never race a later optimization.
-# 2 + 46 + 2 = exactly 50; enforced by tests/test_registry.py.
+# The 50-query prefix the correctness harness verdicts: every one-round-stale
+# query (tests/test_registry.py), led by those whose code the same commit changes.
 _VERIFY_FIRST = (
-    # -- changed in r12 after the r12 rotation (driver must re-verdict) --
-    "test_unique",
-    "decontaminate",
-    # -- r11-stale cohort (latest verdict is one round old) --------------
-    "annual_agg",
-    "annual_summary",
-    "asof_join",
-    "bloom_decontaminate",
-    "case_bands",
-    "chunk_documents",
-    "completeness",
-    "contract_check",
     "dedup_cluster",
-    "dedup_minhash",
-    "distinct_spine",
-    "fingerprint",
-    "freshness_check",
-    "incremental_upsert",
-    "knn_brute",
-    "knn_quantized",
-    "latest_per_entity",
-    "left_join_enrich",
-    "length_buckets",
-    "monthly_lag",
-    "pack_sequences",
-    "paragraph_dedup",
-    "pii_redact",
-    "range_join_agg",
-    "rank_in_year",
-    "region_share",
-    "registry_pipeline",
-    "repetition_stats",
-    "rolling_avg",
-    "scd2_snapshot",
-    "schema_test_suite",
-    "simhash",
-    "singular_consistency",
-    "staging_projection",
     "stream_incremental",
-    "targeted_delete",
-    "test_range_nofuture",
-    "test_relationships",
-    "text_clean",
-    "text_stats",
-    "tfidf_topk",
-    "token_count",
-    "unigram_logprob",
-    "union_append",
-    "unit_test_mock",
-    "watermark_filter",
-    # -- round-13 optimization targets (re-verdict post-change) ----------
-    # dedup_embedding carries an r12 verdict but its code changed this
-    # round (probe-side widen), so it must re-verify in-round.
-    # stream_join and stream_stateful_totals were examined with
-    # measured NON-changes only (comment-level edits at most);
-    # stateful_totals keeps the second slot as this round's most
-    # re-measured streaming path.
-    "dedup_embedding",
-    "stream_stateful_totals",
+    "anomaly_zscore",
+    "avail_agg",
+    "bucketed_join",
+    "compact_files",
+    "corpus_curation",
+    "dedup_exact",
+    "embedding_normalize",
+    "event_transitions",
+    "forecast_ensemble",
+    "forecast_ols",
+    "frame_sample",
+    "funnel_steps",
+    "hash_split",
+    "jsonstat_decode",
+    "kmeans_refine",
+    "knn_ivf",
+    "knn_lsh",
+    "label_centroids",
+    "lang_id",
+    "lsh_buckets",
+    "media_features",
+    "media_pipeline",
+    "notnull_violations",
+    "partition_pruned",
+    "pivot_events",
+    "purge_escaped_partitions",
+    "quality_scorecard",
+    "rest_ingest",
+    "rollup_time",
+    "salted_agg",
+    "salted_join",
+    "sample_stratified",
+    "schema_evolve_read",
+    "seed_eu_status",
+    "sessionize",
+    "sketch_agg",
+    "source_mix_weights",
+    "stream_dedup",
+    "stream_enrich",
+    "stream_join",
+    "stream_sessionize",
+    "stream_window_counts",
+    "table_profile",
+    "temperature_resample",
+    "training_shuffle",
+    "vocab_topk",
+    "wordlist_ratio",
+    "zorder_layout",
 )
 
 

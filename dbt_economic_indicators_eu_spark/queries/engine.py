@@ -21,6 +21,7 @@ from ..materialize.incremental import merge_upsert
 from ..materialize.snapshot import scd2_merge
 from ..models.econ import load_seed
 from ..plans.registry import Registry
+from ..session import session_state
 from ..sources.jsonstat import decode_jsonstat_str
 from ..testing.generic import test_not_null
 from .common import EVENTS_NORM_SQL, QueryDef, load, money4_sum_r2, money4_sum_sql
@@ -523,12 +524,6 @@ def _cleanup_rest_scratch() -> None:
 
     if _REST_SCRATCH is not None:
         shutil.rmtree(_REST_SCRATCH, ignore_errors=True)
-# (appId, session identity) → per-dataset decoded extract frames. The
-# extract chain is a PURE plan over static fixture payloads (~50 py4j
-# Column constructions through the JSON-stat decoder, built twice per
-# ingest run) — only the LOAD below is effectful and must re-run per
-# call. Same liveness argument as common._PLAN_CACHE.
-_EXTRACT_CACHE: dict[tuple[str, int], dict[str, DataFrame]] = {}
 
 
 def q_rest_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -541,8 +536,12 @@ def q_rest_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         code = url.rsplit("?", 1)[0].rsplit("/", 1)[-1]
         return _REST_FIXTURES[code]
 
-    skey = (spark.sparkContext.applicationId, id(spark))
-    extracts = _EXTRACT_CACHE.setdefault(skey, {})
+    # dataset code → decoded extract frame, per session. The extract
+    # chain is a PURE plan over static fixture payloads (~50 py4j Column
+    # constructions through the JSON-stat decoder, built twice per
+    # ingest run) — only the LOAD below is effectful and must re-run
+    # per call.
+    extracts = session_state(spark, "rest_extract")
 
     def extract(code: str) -> DataFrame:
         cached = extracts.get(code)

@@ -1,4 +1,5 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory with scale-oriented defaults, and the per-session
+state store.
 
 The reference delegates all execution to DuckDB with ``threads: 4/8``
 (reference ``profiles.yml:11,14``). Here Catalyst+AQE replace DuckDB's
@@ -19,13 +20,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
-
 
 def get_spark(
-    app_name: str = "dbt-economic-indicators-eu-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or get) a SparkSession with engine defaults.
@@ -37,18 +34,15 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
         master = f"local[{cpus}]"
-    shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-    )
 
     builder = (
-        SparkSession.builder.appName(app_name)
+        SparkSession.builder.appName("dbt-economic-indicators-eu-spark")
         .master(master)
         # --- optimizer / adaptive execution ---
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.cbo.enabled", "true")
         # --- scan sizing (128 MiB splits: the parquet row-group sweet spot) ---
@@ -72,3 +66,11 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def session_state(spark: SparkSession, kind: str) -> dict:
+    """This session's memo table ``kind``. It lives on the session
+    object, so no entry is ever served to another session (a
+    ``newSession()`` sibling, or the session ``getOrCreate()`` returns
+    after ``stop()``); ``setdefault`` keeps first use thread-safe."""
+    return spark.__dict__.setdefault("_engine_state", {}).setdefault(kind, {})

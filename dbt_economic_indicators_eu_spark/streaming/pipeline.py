@@ -120,7 +120,7 @@ DEFAULT_WATERMARK = "1 hour"
 # start, so it is a per-pipeline knob, not a session conf. Swept 1/4/
 # 8/16 at sf0.1: 8 minimizes the drain (1 serializes session_window's
 # sort, 16 pays extra store setup).
-DEFAULT_STATE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8"))
+DEFAULT_STATE_PARTITIONS = 8
 
 
 @contextmanager

@@ -25,6 +25,51 @@ def test_scan_cache_keys_by_sf_dir(spark):
     assert load(spark, SF_A, "customer") is load(spark, SF_A, "customer")
 
 
+def test_session_state_isolates_sibling_sessions(spark):
+    """Per-session memo tables (analysed scans, built plans, verified
+    dedup pairs): a repeat call on one session returns the identical
+    frame, and a newSession() sibling — same SparkContext and
+    applicationId, separate confs and temp views — builds its own frame
+    bound to itself instead of being served the first session's."""
+    from dbt_economic_indicators_eu_spark.queries.common import all_queries, load
+    from dbt_economic_indicators_eu_spark.queries.datapipe import _verified_pairs
+
+    query = all_queries()["annual_agg"]
+    assert not query.effectful  # goes through the plan cache
+    lookups = {
+        "load": lambda s: load(s, SF_A, "customer"),
+        "plan": lambda s: query.builder(s, SF_A),
+        "pairs": lambda s: _verified_pairs(s, SF_A),
+    }
+    sibling = spark.newSession()  # shares the fixture's context: never stop it
+    for name, lookup in lookups.items():
+        first = lookup(spark)
+        assert lookup(spark) is first, name
+        other = lookup(sibling)
+        assert other is not first, name
+        assert other.sparkSession is sibling, name
+        assert lookup(sibling) is other, name
+
+
+def test_env_knobs_are_deployment_settings_only():
+    """The package reads exactly two SPARK_GRAFT_* variables, both host
+    resources (core count, driver heap); every other engine setting is a
+    constant, so no environment can run a configuration the tests and
+    benchmark never cover."""
+    import pathlib
+    import re
+
+    import dbt_economic_indicators_eu_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    names = {
+        m
+        for f in root.rglob("*.py")
+        for m in re.findall(r"SPARK_GRAFT_([A-Z0-9_]+)", f.read_text())
+    }
+    assert names == {"CPUS", "DRIVER_MEM"}
+
+
 def test_state_partitions_ctx_restores_conf(spark):
     from dbt_economic_indicators_eu_spark.streaming.pipeline import state_partitions
 

@@ -148,11 +148,12 @@ HEADLINERS = [
     ),
     (
         "bloom_decontaminate",
-        "The 2^16-bit bloom bitmask is built with a bit_or aggregate "
-        "(1024-row table) and met by the corpus only through "
-        "BroadcastHashJoins — prefilter survivors then exact-confirm "
-        "against the bounded benchmark set. The corpus never "
-        "sort-merges; the result is exact (oracle = plain join).",
+        "The 2^16-bit bloom bitmask folds (bit_or per 64-bit word) into "
+        "a one-row word→mask map that the corpus meets through a single "
+        "BroadcastNestedLoopJoin, probing it with two map lookups per "
+        "shingle — prefilter survivors then exact-confirm against the "
+        "bounded benchmark set through a BroadcastHashJoin. The corpus "
+        "never sort-merges; the result is exact (oracle = plain join).",
     ),
     (
         "kmeans_refine",
